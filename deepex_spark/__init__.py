@@ -15,7 +15,10 @@ batches, zero shuffles); relational stages are pure DataFrame ops so
 Catalyst/AQE handle pushdown, broadcast, and skew.
 """
 
+from deepex_spark import zip_guard
 from deepex_spark.config import DeepExConfig
+
+zip_guard.install()
 
 __version__ = "0.1.0"
 

@@ -3,10 +3,11 @@
 The extension is compiled once per machine/interpreter from the committed C
 source (no network, plain ``cc`` from the toolchain) into the package
 directory — or, when that is read-only, a per-user temp dir keyed by the
-source hash. Concurrent builders (32 local executor python workers all
-importing the kernel at once) serialize on an ``fcntl`` lock and the
-compile writes to a unique temp name followed by an atomic rename, so a
-half-written .so can never be loaded.
+source hash (mode 0o700; skipped when it is a symlink, another user's, or
+group/other-writable). Concurrent builders (32 local executor python
+workers all importing the kernel at once) serialize on an ``fcntl`` lock
+and the compile writes to a unique temp name followed by an atomic rename,
+so a half-written .so can never be loaded.
 
 ``load_cbeam()`` returns the module or ``None`` (no compiler, build error,
 or ``DEEPEX_DISABLE_CBEAM=1``) — callers fall back to the pure-Python
@@ -19,10 +20,12 @@ from __future__ import annotations
 import hashlib
 import importlib.util
 import os
+import stat
 import subprocess
 import sys
 import sysconfig
 import tempfile
+from collections.abc import Iterator
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_cbeam.c")
 
@@ -37,12 +40,35 @@ def _so_name(tag: str) -> str:
     return f"_cbeam_{tag}.{abi}.so"
 
 
-def _candidate_dirs() -> list[str]:
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp_dir = os.path.join(
-        tempfile.gettempdir(), f"deepex_cbeam_{os.getuid() if hasattr(os, 'getuid') else 0}"
+def _private_dir(path: str) -> bool:
+    """Create ``path`` with mode 0o700 if missing. True only when it is a
+    real directory (not a symlink) owned by this user that neither group nor
+    others can write: a shared temp dir must not let another local user
+    plant the ``.so`` this process would load."""
+    try:
+        os.mkdir(path, 0o700)
+    except FileExistsError:
+        pass
+    except OSError:
+        return False
+    try:
+        st = os.lstat(path)
+    except OSError:
+        return False
+    return (
+        stat.S_ISDIR(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
     )
-    return [pkg_dir, tmp_dir]
+
+
+def _candidate_dirs() -> Iterator[str]:
+    yield os.path.dirname(os.path.abspath(__file__))
+    # the temp fallback is created (and vetted) only when the package dir
+    # did not serve
+    tmp_dir = os.path.join(tempfile.gettempdir(), f"deepex_cbeam_{os.getuid()}")
+    if _private_dir(tmp_dir):
+        yield tmp_dir
 
 
 def _compile(so_path: str) -> bool:
@@ -87,7 +113,6 @@ def load_cbeam():
             except (ImportError, OSError):
                 continue
         try:
-            os.makedirs(d, exist_ok=True)
             lock_path = os.path.join(d, "_cbeam.lock")
             import fcntl
 

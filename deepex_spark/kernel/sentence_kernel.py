@@ -288,6 +288,14 @@ def uni_beam(node, offset, dvals, didx, att_rows, topk, bound, first_beam):
     return beam
 
 
+def _native_config(cfg) -> bool:
+    """Whether the C kernel implements ``cfg`` exactly. Degenerate configs
+    (``beam_size < 1``, a negative ``search_n``) take the reference Python
+    path, so they behave the same with and without the native kernel."""
+    sn = cfg.search_n
+    return 1 <= cfg.beam_size <= 128 and (sn is None or sn == "None" or int(sn) >= 0)
+
+
 def beam_search_ie(att: np.ndarray, feat: SentenceFeatures, cfg):
     """IE-mode pair enumeration + beam walks (kgm.py:393-421). Returns raw
     sequences [(path_tuple, score)] after filter/sort (kgm.py:274-294)."""
@@ -303,7 +311,7 @@ def beam_search_ie(att: np.ndarray, feat: SentenceFeatures, cfg):
         # (kgm.py:402-404)
         pruned = pruned + np.triu(pruned.T, k=1)
     n_side = pruned.shape[0]
-    if _cbeam is not None and n_side <= 256 and cfg.beam_size <= 128:
+    if _cbeam is not None and n_side <= 256 and _native_config(cfg):
         # native path: identical walk enumeration/ordering/arithmetic in C
         # (_cbeam.c) — the expensive per-sentence loop without interpreter
         # overhead. Fallback below is the reference Python implementation.
@@ -561,7 +569,7 @@ def process_sentence_tuples(docid: str, offset: int, text: str, cfg, att_provide
         and hasattr(_cbeam, "ie_sentence")
         and cfg.beam_mode != "RC"
         and rank_code is not None
-        and cfg.beam_size <= 128
+        and _native_config(cfg)
     )
     if use_c:
         payload = []

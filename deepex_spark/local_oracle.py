@@ -49,6 +49,7 @@ def local_candidates(pages: list[tuple[str, str]], cfg: DeepExConfig) -> list[di
                     r["dis_fwd"], r["dis_rev"] = candidate_distances(
                         r["sent_text"], r["subj"], r["rel"], r["obj"],
                         cfg.encoder_dim, sent_cache,
+                        cfg.encoder_provider == "surrogate",
                     )
                 rows.append(r)
     return rows

@@ -96,6 +96,64 @@ NESTED_SCHEMA, _, _ = _schemas(True, True)
 _NESTED_COLUMNS = [f.name for f in NESTED_SCHEMA.fields]
 
 
+def kernel_batches(
+    batches: Iterator[pd.DataFrame], cfg: DeepExConfig
+) -> Iterator[pd.DataFrame]:
+    """Body of the kernel stage: sentence batches -> one nested row per
+    sentence with candidates (``_schemas(cfg.emit_sent_text,
+    cfg.emit_triple_key)``'s nested schema).
+
+    The sentence-embedding cache lives for one sentence, so a task's memory
+    does not grow with its input; every candidate of a sentence shares that
+    sentence's embedding, so nothing is recomputed."""
+    # imports inside the task so executors resolve them locally
+    from deepex_spark.kernel.sentence_kernel import process_sentence_tuples
+    from deepex_spark.nlp.attention import get_attention_provider
+    from deepex_spark.operators.rerank import candidate_distances
+
+    with_text = cfg.emit_sent_text
+    nested_schema, _, _ = _schemas(with_text, cfg.emit_triple_key)
+    nested_cols = [f.name for f in nested_schema.fields]
+    # tuple order from process_sentence_tuples: docid, sent_offset,
+    # sent_text, then _PER_CAND fields minus the distances; slice off the
+    # per-sentence prefix (and triple_key when slimmed)
+    cand_lo = 3 if cfg.emit_triple_key else 4
+    # the surrogate encoder embeds a bag of tokens, so the reversed
+    # emission's distance equals the forward one; any other encoder gets
+    # both sides computed
+    symmetric = cfg.encoder_provider == "surrogate"
+    provider = get_attention_provider(cfg)
+    for pdf in batches:
+        rows: list[tuple] = []
+        for docid, pos, off, text in zip(
+            pdf["docid"], pdf["sent_pos"], pdf["sent_offset"], pdf["sent_text"]
+        ):
+            ts = process_sentence_tuples(docid, int(off), text, cfg, provider)
+            if not ts:
+                continue
+            cols = list(zip(*ts))[cand_lo:]
+            if cfg.rerank_sorted:
+                sent_cache: dict = {}
+                dis = [
+                    candidate_distances(
+                        t[2], t[4], t[5], t[6], cfg.encoder_dim, sent_cache, symmetric
+                    )
+                    for t in ts
+                ]
+                dis_fwd = [d[0] for d in dis]
+                dis_rev = [d[1] for d in dis]
+            else:
+                dis_fwd = [None] * len(ts)
+                dis_rev = [None] * len(ts)
+            rows.append(
+                (docid, int(pos), int(off))
+                + ((text,) if with_text else ())
+                + tuple(list(c) for c in cols)
+                + (dis_fwd, dis_rev)
+            )
+        yield pd.DataFrame(rows, columns=nested_cols)
+
+
 def extract_candidates(
     sentences: DataFrame, cfg: DeepExConfig, repartition: bool = True
 ) -> DataFrame:
@@ -118,57 +176,21 @@ def extract_candidates(
         # steal burst, thermal throttle, straggler node on a real cluster —
         # stretches the final wave by a whole task (~minutes at web scale).
         # Finer tasks let the scheduler route around heterogeneous core
-        # speeds; per-task overhead (python worker reuse, Arrow setup) is
-        # milliseconds against multi-second tasks.
+        # speeds. Their fixed cost is not negligible: on a 4-core host at
+        # local[4] under CPython 3.11, a 128-task mapInPandas with a 1 ms
+        # body took 9.6 s (~0.3 s per task per core) while every task
+        # re-read the zip directories on the worker path, and 3.0 s
+        # (~0.09 s) with deepex_spark.zip_guard installed.
         n_parts = cfg.repartition_by_url or (
             sentences.sparkSession.sparkContext.defaultParallelism * 8
         )
         sentences = sentences.repartition(n_parts)
 
-    compute_dis = cfg.rerank_sorted
     with_text = cfg.emit_sent_text
-    with_key = cfg.emit_triple_key
-    nested_schema, per_cand, flat_cols = _schemas(with_text, with_key)
-    nested_cols = [f.name for f in nested_schema.fields]
-    # tuple order from process_sentence_tuples: docid, sent_offset,
-    # sent_text, then _PER_CAND fields minus the distances; slice off the
-    # per-sentence prefix (and triple_key when slimmed)
-    cand_lo = 3 if with_key else 4
+    nested_schema, per_cand, flat_cols = _schemas(with_text, cfg.emit_triple_key)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # imports inside the task so executors resolve them locally
-        from deepex_spark.kernel.sentence_kernel import process_sentence_tuples
-        from deepex_spark.nlp.attention import get_attention_provider
-        from deepex_spark.operators.rerank import candidate_distances
-
-        provider = get_attention_provider(cfg)
-        sent_cache: dict = {}
-        for pdf in batches:
-            rows: list[tuple] = []
-            for docid, pos, off, text in zip(
-                pdf["docid"], pdf["sent_pos"], pdf["sent_offset"], pdf["sent_text"]
-            ):
-                ts = process_sentence_tuples(docid, int(off), text, cfg, provider)
-                if not ts:
-                    continue
-                cols = list(zip(*ts))[cand_lo:]
-                if compute_dis:
-                    dis = [
-                        candidate_distances(t[2], t[4], t[5], t[6], cfg.encoder_dim, sent_cache)
-                        for t in ts
-                    ]
-                    dis_fwd = [d[0] for d in dis]
-                    dis_rev = [d[1] for d in dis]
-                else:
-                    dis_fwd = [None] * len(ts)
-                    dis_rev = [None] * len(ts)
-                rows.append(
-                    (docid, int(pos), int(off))
-                    + ((text,) if with_text else ())
-                    + tuple(list(c) for c in cols)
-                    + (dis_fwd, dis_rev)
-                )
-            yield pd.DataFrame(rows, columns=nested_cols)
+        return kernel_batches(batches, cfg)
 
     nested = sentences.mapInPandas(run, schema=nested_schema)
     # JVM-side explode back to one row per candidate (codegen'd Generate)

@@ -118,14 +118,22 @@ _NON_ASCII = _re.compile(r"[^\x00-\x7F]+")
 
 
 def candidate_distances(
-    sent_text: str, subj: str, rel: str, obj: str, dim: int, sent_cache: dict
+    sent_text: str,
+    subj: str,
+    rel: str,
+    obj: str,
+    dim: int,
+    sent_cache: dict,
+    symmetric: bool = True,
 ) -> tuple[float, float]:
     """Distances for the forward and reversed emission of one candidate —
     exactly what the reference's reranker would compute for each of the two
     distilled triples (relation scrubbed first, as distillation emits it,
     distillation.py:100-113; sentence gets the '$input_txt:$ ' prefix).
 
-    The reversed emission's distance is computed from the SAME embedding:
+    ``symmetric`` (the default, the surrogate encoder's case) computes the
+    reversed emission's distance from the SAME embedding; callers holding a
+    config pass ``cfg.encoder_provider == "surrogate"``.
     ``str((obj, rel, subj))`` is a permutation of ``str((subj, rel, obj))``'s
     elements, the regex tokens never span element boundaries (every
     boundary char — quote, comma, space, paren — is punctuation or
@@ -133,11 +141,15 @@ def candidate_distances(
     accumulates exact ±1 integers (order-free float sums) and normalizes by
     an exact integer norm, so the two embeddings — and therefore the two
     distances — are bit-identical. Verified by tests/test_rerank_symmetry
-    and (historically) by every golden: dis_fwd == dis_rev on all rows."""
+    and (historically) by every golden: dis_fwd == dis_rev on all rows. A
+    real dual encoder has no such symmetry: ``symmetric=False`` computes
+    both sides."""
     rel_s = _NON_ASCII.sub(" ", rel).strip()
     sentence = "$input_txt:$ " + sent_text
     d = contrastive_distance_py(sentence, subj, rel_s, obj, dim, sent_cache)
-    return (d, d)
+    if symmetric:
+        return (d, d)
+    return (d, contrastive_distance_py(sentence, obj, rel_s, subj, dim, sent_cache))
 
 
 def add_contrastive_distance(triples: DataFrame, cfg: DeepExConfig) -> DataFrame:

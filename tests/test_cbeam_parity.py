@@ -85,3 +85,49 @@ def test_process_sentence_end_to_end_identical():
             sk._cbeam = saved
         na = process_sentence(f"p{i}", 3, sent, cfg, provider)
         assert py == na
+
+
+_DEGENERATE = {"beam_size=0": {"beam_size": 0}, "search_n=-1": {"search_n": -1}}
+
+_DEGENERATE_RUN = """
+import json, sys
+from deepex_spark.config import DeepExConfig
+from deepex_spark.kernel.sentence_kernel import process_sentence
+from deepex_spark.nlp.attention import get_attention_provider
+from deepex_spark.sources.pages import synth_doc_for
+
+out = {}
+for name, kw in json.loads(sys.argv[1]).items():
+    cfg = DeepExConfig.task(**kw)
+    provider = get_attention_provider(cfg)
+    out[name] = [
+        process_sentence(f"g{i}", 0, synth_doc_for(i, seed=17)[:300], cfg, provider)
+        for i in range(6)
+    ]
+print(json.dumps(out))
+"""
+
+
+def test_degenerate_configs_match_disabled_native_kernel():
+    """beam_size < 1 and a negative search_n are outside what the C kernel
+    implements: with it loaded they must give exactly what a process with
+    DEEPEX_DISABLE_CBEAM=1 gives (the reference Python path)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    run = [sys.executable, "-c", _DEGENERATE_RUN, json.dumps(_DEGENERATE)]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def outputs(**env):
+        proc = subprocess.run(
+            run, capture_output=True, check=True, text=True, cwd=repo,
+            env=dict(os.environ, **env),
+        )
+        return json.loads(proc.stdout)
+
+    native = outputs()
+    python = outputs(DEEPEX_DISABLE_CBEAM="1")
+    assert native == python
+    assert sum(map(len, python["search_n=-1"])) > 0
