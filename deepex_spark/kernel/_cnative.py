@@ -25,6 +25,7 @@ import subprocess
 import sys
 import sysconfig
 import tempfile
+import warnings
 from collections.abc import Iterator
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_cbeam.c")
@@ -55,11 +56,23 @@ def _private_dir(path: str) -> bool:
         st = os.lstat(path)
     except OSError:
         return False
-    return (
+    if (
         stat.S_ISDIR(st.st_mode)
         and st.st_uid == os.getuid()
         and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+    ):
+        return True
+    # an older release created this dir with the umask's mode (often 0o775);
+    # say so, or the native kernel is silently replaced by the Python path
+    warnings.warn(
+        f"not loading the native beam kernel from {path}: it is a symlink, "
+        "another user's, or group/other-writable. Run `chmod 700` on it if "
+        "it is your own directory, or remove it so it is re-created private; "
+        "until then the slower Python kernel runs.",
+        RuntimeWarning,
+        stacklevel=2,
     )
+    return False
 
 
 def _candidate_dirs() -> Iterator[str]:

@@ -16,7 +16,7 @@ from deepex_spark.functions.text import blank_parens_py
 from deepex_spark.kernel.sentence_kernel import process_sentence
 from deepex_spark.nlp.attention import get_attention_provider
 from deepex_spark.operators.distill import SENT_PREFIX
-from deepex_spark.operators.rerank import candidate_distances
+from deepex_spark.operators.rerank import candidate_distances, require_surrogate_encoder
 
 # re.ASCII mirrors Java regex \s (no UNICODE_CHARACTER_CLASS); trim is
 # ' '-only to match F.trim exactly (SPARK-17299) — same doc-edge
@@ -37,6 +37,8 @@ def local_sentencize(text: str) -> list[tuple[int, int, str]]:
 
 
 def local_candidates(pages: list[tuple[str, str]], cfg: DeepExConfig) -> list[dict]:
+    if cfg.rerank_sorted:
+        require_surrogate_encoder(cfg)
     provider = get_attention_provider(cfg)
     rows = []
     sent_cache: dict = {}
@@ -49,7 +51,6 @@ def local_candidates(pages: list[tuple[str, str]], cfg: DeepExConfig) -> list[di
                     r["dis_fwd"], r["dis_rev"] = candidate_distances(
                         r["sent_text"], r["subj"], r["rel"], r["obj"],
                         cfg.encoder_dim, sent_cache,
-                        cfg.encoder_provider == "surrogate",
                     )
                 rows.append(r)
     return rows

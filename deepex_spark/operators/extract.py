@@ -16,6 +16,7 @@ it — needed for faithful tie-breaking downstream).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -118,10 +119,6 @@ def kernel_batches(
     # sent_text, then _PER_CAND fields minus the distances; slice off the
     # per-sentence prefix (and triple_key when slimmed)
     cand_lo = 3 if cfg.emit_triple_key else 4
-    # the surrogate encoder embeds a bag of tokens, so the reversed
-    # emission's distance equals the forward one; any other encoder gets
-    # both sides computed
-    symmetric = cfg.encoder_provider == "surrogate"
     provider = get_attention_provider(cfg)
     for pdf in batches:
         rows: list[tuple] = []
@@ -135,9 +132,7 @@ def kernel_batches(
             if cfg.rerank_sorted:
                 sent_cache: dict = {}
                 dis = [
-                    candidate_distances(
-                        t[2], t[4], t[5], t[6], cfg.encoder_dim, sent_cache, symmetric
-                    )
+                    candidate_distances(t[2], t[4], t[5], t[6], cfg.encoder_dim, sent_cache)
                     for t in ts
                 ]
                 dis_fwd = [d[0] for d in dis]
@@ -170,6 +165,10 @@ def extract_candidates(
     """
     from pyspark.sql import functions as F
 
+    from deepex_spark.operators.rerank import require_surrogate_encoder
+
+    if cfg.rerank_sorted:
+        require_surrogate_encoder(cfg)
     if repartition:
         # 8 task waves, not 2: the kernel stage is the wall-clock floor, and
         # with coarse tasks (parallelism*2) a single slowed core — hypervisor
@@ -186,14 +185,11 @@ def extract_candidates(
         )
         sentences = sentences.repartition(n_parts)
 
-    with_text = cfg.emit_sent_text
-    nested_schema, per_cand, flat_cols = _schemas(with_text, cfg.emit_triple_key)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return kernel_batches(batches, cfg)
-
-    nested = sentences.mapInPandas(run, schema=nested_schema)
+    nested_schema, per_cand, flat_cols = _schemas(cfg.emit_sent_text, cfg.emit_triple_key)
+    nested = sentences.mapInPandas(partial(kernel_batches, cfg=cfg), schema=nested_schema)
     # JVM-side explode back to one row per candidate (codegen'd Generate)
     zipped = F.arrays_zip(*[F.col(c) for c in per_cand])
-    per_sent = ["docid", "sent_pos", "sent_offset"] + (["sent_text"] if with_text else [])
+    per_sent = ["docid", "sent_pos", "sent_offset"] + (
+        ["sent_text"] if cfg.emit_sent_text else []
+    )
     return nested.select(*per_sent, F.inline(zipped)).select(*flat_cols)

@@ -13,7 +13,8 @@ Providers:
   bag-of-wordpieces for each side — shape-compatible with the dual-encoder
   pooling (segment-0 sum vs segment-1 sum, both L2-normalized) and fully
   vectorized in numpy over Arrow batches.
-* hf: the production dual-encoder path, gated behind import-try.
+* any other value (e.g. 'hf', a real dual encoder) is not implemented
+  and is rejected by ``require_surrogate_encoder``.
 
 Known deviation from the reference, by design: ``Reranking`` in the
 reference indexes the *unsorted* triples list while batching the
@@ -118,22 +119,14 @@ _NON_ASCII = _re.compile(r"[^\x00-\x7F]+")
 
 
 def candidate_distances(
-    sent_text: str,
-    subj: str,
-    rel: str,
-    obj: str,
-    dim: int,
-    sent_cache: dict,
-    symmetric: bool = True,
+    sent_text: str, subj: str, rel: str, obj: str, dim: int, sent_cache: dict
 ) -> tuple[float, float]:
     """Distances for the forward and reversed emission of one candidate —
     exactly what the reference's reranker would compute for each of the two
     distilled triples (relation scrubbed first, as distillation emits it,
     distillation.py:100-113; sentence gets the '$input_txt:$ ' prefix).
 
-    ``symmetric`` (the default, the surrogate encoder's case) computes the
-    reversed emission's distance from the SAME embedding; callers holding a
-    config pass ``cfg.encoder_provider == "surrogate"``.
+    The reversed emission's distance is computed from the SAME embedding:
     ``str((obj, rel, subj))`` is a permutation of ``str((subj, rel, obj))``'s
     elements, the regex tokens never span element boundaries (every
     boundary char — quote, comma, space, paren — is punctuation or
@@ -141,18 +134,27 @@ def candidate_distances(
     accumulates exact ±1 integers (order-free float sums) and normalizes by
     an exact integer norm, so the two embeddings — and therefore the two
     distances — are bit-identical. Verified by tests/test_rerank_symmetry
-    and (historically) by every golden: dis_fwd == dis_rev on all rows. A
-    real dual encoder has no such symmetry: ``symmetric=False`` computes
-    both sides."""
+    and (historically) by every golden: dis_fwd == dis_rev on all rows.
+    That holds for the surrogate encoder only; ``require_surrogate_encoder``
+    rejects any other one before distances are computed."""
     rel_s = _NON_ASCII.sub(" ", rel).strip()
     sentence = "$input_txt:$ " + sent_text
     d = contrastive_distance_py(sentence, subj, rel_s, obj, dim, sent_cache)
-    if symmetric:
-        return (d, d)
-    return (d, contrastive_distance_py(sentence, obj, rel_s, subj, dim, sent_cache))
+    return (d, d)
+
+
+def require_surrogate_encoder(cfg: DeepExConfig) -> None:
+    """Only the surrogate encoder (``_hash_embed``) is implemented; fail on
+    the driver rather than score an 'hf' config with surrogate distances."""
+    if cfg.encoder_provider != "surrogate":
+        raise ValueError(
+            f"encoder_provider={cfg.encoder_provider!r} is not supported; "
+            "only 'surrogate' is implemented"
+        )
 
 
 def add_contrastive_distance(triples: DataFrame, cfg: DeepExConfig) -> DataFrame:
+    require_surrogate_encoder(cfg)
     dim = cfg.encoder_dim
 
     schema = StructType(

@@ -1,8 +1,10 @@
 """The native kernel's temp-dir fallback loads nothing from a directory
-another user could write to; the Python path then gives the same rows."""
+another user could write to, says so in a warning, and the Python path then
+gives the same rows."""
 
 import os
 import stat
+import warnings
 
 import pytest
 
@@ -34,7 +36,8 @@ def test_world_writable_fallback_dir_is_not_used(read_only_package, monkeypatch)
     planted = os.path.join(fallback, _cnative._so_name(_cnative._src_tag()))
     with open(planted, "wb") as f:
         f.write(b"not a shared object")
-    loaded = _cnative.load_cbeam()
+    with pytest.warns(RuntimeWarning, match=fallback):
+        loaded = _cnative.load_cbeam()
     assert loaded is None and imported == []
     assert os.listdir(fallback) == [os.path.basename(planted)]  # no lock either
 
@@ -59,12 +62,32 @@ def test_symlinked_fallback_dir_is_not_used(read_only_package, tmp_path):
     target = tmp_path / "elsewhere"
     target.mkdir(mode=0o700)
     os.symlink(target, fallback)
-    assert _cnative.load_cbeam() is None
+    with pytest.warns(RuntimeWarning, match=fallback):
+        assert _cnative.load_cbeam() is None
     assert imported == [] and os.listdir(target) == []
+
+
+def test_own_group_writable_fallback_dir_is_reported(read_only_package):
+    # what an older release left behind: created with the umask's mode
+    fallback, imported = read_only_package
+    os.mkdir(fallback)
+    os.chmod(fallback, 0o775)
+    with pytest.warns(RuntimeWarning, match=r"chmod 700") as caught:
+        assert _cnative.load_cbeam() is None
+    assert fallback in str(caught[0].message)
+    assert imported == [] and os.listdir(fallback) == []
+
+    os.chmod(fallback, 0o700)  # the fix the warning names
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _cnative.load_cbeam() is None  # no compiler, but no warning
+    assert os.listdir(fallback) == ["_cbeam.lock"]
 
 
 def test_missing_fallback_dir_is_created_private(read_only_package):
     fallback, _ = read_only_package
-    assert _cnative.load_cbeam() is None  # no compiler
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _cnative.load_cbeam() is None  # no compiler
     mode = os.lstat(fallback).st_mode
     assert stat.S_ISDIR(mode) and stat.S_IMODE(mode) & 0o077 == 0

@@ -1,8 +1,9 @@
 """The kernel stage's body (``extract.kernel_batches``) run in-process:
-per-task memory stays bounded and the reversed-emission distance shortcut
-is taken only for the surrogate encoder."""
+per-task memory stays bounded, each candidate is embedded once, and an
+encoder other than the surrogate one is rejected before any task runs."""
 
 import pandas as pd
+import pytest
 
 from deepex_spark.config import DeepExConfig
 from deepex_spark.operators import rerank
@@ -39,29 +40,30 @@ def test_sentence_cache_never_holds_more_than_one_entry(monkeypatch):
     assert sizes and max(sizes) == 1
 
 
-def _asymmetric(sentence, subj, rel, obj, dim, cache=None):
-    return float(len(subj)) - 0.5 * len(obj)
+def test_non_surrogate_encoder_is_rejected_on_the_driver(spark):
+    from deepex_spark.local_oracle import local_candidates
+    from deepex_spark.operators.extract import extract_candidates
+
+    cfg = DeepExConfig.small(encoder_provider="hf")
+    sentences = spark.createDataFrame(_sentences())
+    with pytest.raises(ValueError, match="encoder_provider='hf'"):
+        extract_candidates(sentences, cfg)
+    with pytest.raises(ValueError, match="encoder_provider='hf'"):
+        rerank.add_contrastive_distance(sentences, cfg)
+    with pytest.raises(ValueError, match="encoder_provider='hf'"):
+        local_candidates([("d0", "Alice met Bob. Bob knew Carol.")], cfg)
+    # '.unsort' mode never embeds, so the encoder is not consulted there
+    unsort = DeepExConfig.small(encoder_provider="hf", rerank_sorted=False)
+    assert extract_candidates(sentences, unsort).columns
 
 
-def test_reversed_distance_computed_for_non_surrogate_encoder(monkeypatch):
-    monkeypatch.setattr(rerank, "contrastive_distance_py", _asymmetric)
-    cfg = DeepExConfig.small(encoder_provider="stub")
-    out = _run(cfg)
-    n_differ = 0
-    for subjs, objs, fwd, rev in zip(out["subj"], out["obj"], out["dis_fwd"], out["dis_rev"]):
-        for s, o, f, r in zip(subjs, objs, fwd, rev):
-            assert f == _asymmetric("", s, "", o, 0)
-            assert r == _asymmetric("", o, "", s, 0)
-            n_differ += f != r
-    assert n_differ > 0
-
-
-def test_surrogate_encoder_reuses_the_forward_distance(monkeypatch):
+def test_surrogate_encoder_embeds_each_candidate_once(monkeypatch):
     calls: list[tuple] = []
+    real = rerank.contrastive_distance_py
 
     def counting(*args):
         calls.append(args)
-        return _asymmetric(*args)
+        return real(*args)
 
     monkeypatch.setattr(rerank, "contrastive_distance_py", counting)
     out = _run(DeepExConfig.small())
